@@ -414,8 +414,9 @@ object SparkEntry {
     * (mirrored in the oracle SQL's bucket-count HAVING).
     */
   private val q26AnnLsh: Q = (s, dir) => {
-    ext.Similarity.annLsh(Tables.embeddings(s, dir),
-      col("vec_id"), col("embedding"), threshold = 0.42)
+    ext.Similarity.annLshPairs(Tables.embeddings(s, dir),
+        col("vec_id"), col("embedding"), threshold = 0.42)
+      .orderBy(col("id_a"), col("id_b"))
   }
 
   private val topicLexicons: Seq[(String, Seq[String])] = Seq(
@@ -2876,7 +2877,7 @@ object SparkEntry {
   }
 
   /** q66 — ⊕ end-to-end embedding near-dup dedup: LSH-bucketed cosine
-    * candidate pairs ([[graft.ext.Similarity.annLsh]], q26's exact
+    * candidate pairs ([[graft.ext.Similarity.annLshPairs]], q26's exact
     * configuration) fed into connected-component cluster formation
     * ([[graft.ext.Dedup.dupClusters]]) — the full "dedup by embedding
     * similarity" path a training-data pipeline runs, as one composed
@@ -3522,22 +3523,6 @@ object SparkEntry {
       .orderBy(col("media_id"))
   }
 
-  /** q95 — ⊕ corpus-sized LSH ([[graft.ext.Similarity.annLshPairsSized]]):
-    * the 100 TB form of q26 — bucket width derived from a count
-    * (log₂(n/target)) so candidate-pair work stays linear in corpus
-    * size (the fixed 6-bit form is measured quadratic past sf1,
-    * BASELINE.md §second-decade). At oracle scale the derived width
-    * IS 6, so the oracle is exactly q26's pair CTE chain — the hash
-    * match proves the sizing path changes nothing at fixture scale
-    * while the sf10 measurement proves it changes everything at
-    * corpus scale.
-    */
-  private val q95AnnLshSized: Q = (s, dir) => {
-    ext.Similarity.annLshPairsSized(Tables.embeddings(s, dir),
-        col("vec_id"), col("embedding"), threshold = 0.42)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
   /** q96 — ⊕ auto-selected rolling features
     * ([[graft.ops.Time.trailingSumsAuto]]): q76's trailing 1-hour
     * count+sum through the histogram-probing wrapper. The events
@@ -4017,25 +4002,6 @@ object SparkEntry {
     sinks.Orc.write(Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"), col("text")), out)
     out
-  }
-
-  /** q112 — ⊕ corpus-sized SemDeDup
-    * ([[graft.ext.Similarity.semDedupSized]]): q106 with k derived
-    * from a count() via `clustersForCorpus` — the scale path that
-    * keeps per-cluster occupancy (and therefore the ε-ball pair
-    * work per row) constant as the corpus grows, where fixed k=16
-    * was measured degenerating at the second decade (every cluster
-    * above the `maxCluster` backstop → dedup finds nothing). At
-    * every driver fixture size the derived k equals the pinned 16
-    * (the q95 floor trick), so the sized path must be bit-identical
-    * to q106's oracle.
-    */
-  private val q112SemDedupSized: Q = (s, dir) => {
-    ext.Similarity.semDedupSized(Tables.embeddings(s, dir),
-        col("vec_id"), col("embedding"), iters = 2,
-        tau = 0.42, quantize = Some(9))
-      .select(col("id"), col("cluster"))
-      .orderBy(col("id"))
   }
 
   /** q113 — ⊕ training-sequence assembly
@@ -4650,21 +4616,6 @@ object SparkEntry {
       .orderBy(col("id"))
   }
 
-  /** q146 — ⊕ corpus-sized PQ SemDeDup
-    * ([[graft.ext.Similarity.semDedupPqSized]]): q145 with the coarse
-    * k derived from a count() via `clustersForCorpus` — the scale
-    * path, after fixed k=16 was measured degenerating at the second
-    * decade (clusters blow past the maxCluster backstop and the pair
-    * scan skips everything). At every driver fixture size the derived
-    * k equals the pinned 16, so this shares q145's oracle bit-for-bit
-    * (the q112 convention).
-    */
-  private val q146SemdedupPqSized: Q = (s, dir) => {
-    ext.Similarity.semDedupPqSized(Tables.embeddings(s, dir),
-        col("vec_id"), col("embedding"), tau = 0.25)
-      .orderBy(col("id"))
-  }
-
   /** q147 — S6 JSONL sink round-trip ([[graft.sources.Jsonl]]): write
     * documents as JSON-lines (the interchange format training
     * pipelines actually move text in), read them back through the
@@ -4714,14 +4665,18 @@ object SparkEntry {
       col("vec_id"), col("embedding"), nprobe = 4, k = 10)
   }
 
-  /** q149 — ⊕ auto-sized LSH pair generation
+  /** q149 (also served as q95) — ⊕ auto-sized LSH pair generation
     * ([[graft.ext.Similarity.annLshPairsAuto]]), THE documented
-    * corpus-scale entry point: one count() derives the bucket width
-    * (bitsForCorpus) and the dominant exchange's partition count
-    * (partitionsForCorpus). Both floor to the pinned configuration
-    * (6 bits / 32 partitions) at fixture scale, so this shares
-    * q26/q95's oracle bit-for-bit — the q112/q146 convention; the
-    * scale evidence is the decade-2 ScaleBench slope.
+    * corpus-scale entry point and the 100 TB form of q26: one count()
+    * derives the bucket width (bitsForCorpus — candidate-pair work
+    * stays linear in corpus size, where the fixed 6-bit form is
+    * measured quadratic past sf1, BASELINE.md §second-decade) and the
+    * dominant exchange's partition count (partitionsForCorpus). Both
+    * floor to the pinned configuration (6 bits / 32 partitions) at
+    * fixture scale, so this shares q26's oracle bit-for-bit: the hash
+    * match proves the sizing path changes nothing at fixture scale,
+    * the decade-2 ScaleBench slope that it changes everything at
+    * corpus scale.
     */
   private val q149AnnLshAuto: Q = (s, dir) => {
     ext.Similarity.annLshPairsAuto(Tables.embeddings(s, dir),
@@ -4729,10 +4684,15 @@ object SparkEntry {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** q150 — ⊕ auto-sized semantic dedup
-    * ([[graft.ext.Similarity.semDedupAuto]]): k from
-    * clustersForCorpus, pair-join partitions from partitionsForCorpus,
-    * both floored at fixture scale → byte-shares q106/q112's oracle.
+  /** q150 (also served as q112) — ⊕ auto-sized semantic dedup
+    * ([[graft.ext.Similarity.semDedupAuto]]): q106 with k from
+    * clustersForCorpus — the scale path that keeps per-cluster
+    * occupancy (and the ε-ball pair work per row) constant as the
+    * corpus grows, where fixed k=16 was measured degenerating at the
+    * second decade (every cluster above the `maxCluster` backstop →
+    * dedup finds nothing) — and pair-join partitions from
+    * partitionsForCorpus. Both floor at fixture scale → byte-shares
+    * q106's oracle.
     */
   private val q150SemDedupAuto: Q = (s, dir) => {
     ext.Similarity.semDedupAuto(Tables.embeddings(s, dir),
@@ -4742,10 +4702,10 @@ object SparkEntry {
       .orderBy(col("id"))
   }
 
-  /** q151 — ⊕ auto-sized PQ semantic dedup
+  /** q151 (also served as q146) — ⊕ auto-sized PQ semantic dedup
     * ([[graft.ext.Similarity.semDedupPqAuto]]): coarse k and the
     * pair-join partition count from one count(), floored at fixture
-    * scale → byte-shares q145/q146's oracle.
+    * scale → byte-shares q145's oracle.
     */
   private val q151SemDedupPqAuto: Q = (s, dir) => {
     ext.Similarity.semDedupPqAuto(Tables.embeddings(s, dir),
@@ -5656,11 +5616,8 @@ object SparkEntry {
             state, roundTo = 4)
           .select(col("id"), array(col("proj"), sqrt(col("resid_sq"))).as("w"))
           .localCheckpoint()
-        // NOT persisted (round-19 measurement): each kept set is consumed
-        // 2-3×, but its recompute is one pair join over ivfFit's already-
-        // persisted assignment (~0.1 s); adding kept-set persists measured
-        // 6.2 s warm vs 5.8 s without — the materialization barriers cost
-        // more than the recompute saves.
+        // each kept set is consumed 2-3×; semDedupParts returns both
+        // tables already materialized, so every consumer reads blocks
         val (coarseAsg, coarseKept) = ext.Similarity.semDedupParts(wc,
           col("id"), col("w"), k = 16, iters = 2, tau = 0.9999,
           quantize = Some(9))
@@ -6838,7 +6795,7 @@ object SparkEntry {
     "q92_weighted_sample"   -> q92WeightedSample,
     "q93_lm_quality"        -> q93LmQuality,
     "q94_adpcm_decode"      -> q94AdpcmDecode,
-    "q95_ann_lsh_sized"     -> q95AnnLshSized,
+    "q95_ann_lsh_sized"     -> q149AnnLshAuto,
     "q96_rolling_auto"      -> q96RollingAuto,
     "q97_span_removal"      -> q97SpanRemoval,
     "q98_decay_auto"        -> q98DecayAuto,
@@ -6855,7 +6812,7 @@ object SparkEntry {
     "q109_pagerank"         -> q109PageRank,
     "q110_quantize_int8"    -> q110QuantizeInt8,
     "q111_orc_roundtrip"    -> q111OrcRoundtrip,
-    "q112_semdedup_sized"   -> q112SemDedupSized,
+    "q112_semdedup_sized"   -> q150SemDedupAuto,
     "q113_seq_assembly"     -> q113SeqAssembly,
     "q114_mixture_sample"   -> q114MixtureSample,
     "q115_edit_dedup"       -> q115EditDedup,
@@ -6889,7 +6846,7 @@ object SparkEntry {
     "q143_ivfpq"            -> q143IvfPq,
     "q144_html_extract"     -> q144HtmlExtract,
     "q145_semdedup_pq"      -> q145SemdedupPq,
-    "q146_semdedup_pq_sized" -> q146SemdedupPqSized,
+    "q146_semdedup_pq_sized" -> q151SemDedupPqAuto,
     "q147_jsonl_roundtrip"  -> q147JsonlRoundtrip,
     "q148_ivfpq_batch"      -> q148IvfPqBatch,
     "q149_ann_lsh_auto"     -> q149AnnLshAuto,
@@ -7984,10 +7941,11 @@ object SparkEntry {
         """SELECT id_a, id_b, cos_sim FROM pairs
           |WHERE cos_sim >= 0.42
           |ORDER BY id_a, id_b""".stripMargin),
-    // q95: EXACTLY q26's oracle — bitsForCorpus(n) is 6 at every
-    // oracle scale factor, so the sized path must reproduce the
-    // fixed-width pairs bit-for-bit (the sizing only diverges at
-    // corpus scale, where it is the fix for the measured quadratic).
+    // q95: EXACTLY q26's oracle — q95 runs the q149 auto form, whose
+    // bitsForCorpus(n) is 6 at every oracle scale factor, so it must
+    // reproduce the fixed-width pairs bit-for-bit (the sizing only
+    // diverges at corpus scale, where it is the fix for the measured
+    // quadratic).
     "q95_ann_lsh_sized" ->
       (annLshPairsCte + "\n" +
         """SELECT id_a, id_b, cos_sim FROM pairs
@@ -9861,9 +9819,10 @@ object SparkEntry {
     // cap mirrored as HAVING (no fixture cluster reaches it, like
     // the q22/q40 bucket caps).
     "q106_semdedup" -> semDedupOracleSql,
-    // q112: the SIZED form must reproduce q106 exactly — the derived
-    // k equals the pinned 16 at every fixture size (floor), so one
-    // oracle serves both and any drift in the sizing path hash-fails.
+    // q112: the corpus-sized form (q150's semDedupAuto) must reproduce
+    // q106 exactly — the derived k equals the pinned 16 at every
+    // fixture size (floor), so one oracle serves both and any drift in
+    // the sizing path hash-fails.
     "q112_semdedup_sized" -> semDedupOracleSql,
     // q150: the AUTO form floors to the same pinned configuration
     // (k=16; the derived partition count is purely physical).
@@ -11655,8 +11614,8 @@ object SparkEntry {
     // replayed codebooks (same ascending fold, same 9-dp entries),
     // q106's cluster cap and ≥tau higher-id drop.
     "q145_semdedup_pq" -> semDedupPqOracleSql,
-    // q146: sized form ≡ fixed form at fixture scale (derived coarse
-    // k = 16 at every driver sf) — the q112 convention.
+    // q146: q151's auto form ≡ fixed form at fixture scale (derived
+    // coarse k = 16 at every fixture sf) — the q112 convention.
     "q146_semdedup_pq_sized" -> semDedupPqOracleSql,
     // q151: the AUTO form — same floors, same oracle.
     "q151_semdedup_pq_auto" -> semDedupPqOracleSql,
@@ -14260,7 +14219,7 @@ object SparkEntry {
       |         0.85 * (coalesce(c3.c, 0) + CAST(d3.dmu AS DOUBLE) / 1e9 / nn), 9) AS r
       |       FROM nodes LEFT JOIN c3 ON c3.n = nodes.n CROSS JOIN cnt CROSS JOIN d3)""".stripMargin
 
-  /** Shared by q106 and q112 (sized form ≡ fixed form at fixture
+  /** Shared by q106, q112 and q150 (auto form ≡ fixed form at fixture
     * scale): the q38 train+assign chain, cluster cap as HAVING,
     * ε-ball drop rule as NOT EXISTS.
     */

@@ -571,8 +571,6 @@ object Dedup {
       prevSum = s
       labels = next
       iters += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(s"[dupClusters] round $iters sum=$s converged=$converged")
     }
     require(converged,
       s"dupClusters did not converge in $maxIters rounds (label sum still " +
@@ -665,8 +663,6 @@ object Dedup {
       prevCount = c
       edges = small
       iters += 1
-      if (sys.env.contains("GRAFT_DEBUG_CC"))
-        System.err.println(s"[dupClustersContracted] round $iters edges=$c converged=$converged")
     }
     require(converged,
       s"dupClustersContracted did not converge in $maxIters rounds — " +
@@ -810,7 +806,7 @@ object Dedup {
   /** CORPUS-SCALE entry point of the near-dup family: [[nearDupPairs]]
     * with the banding geometry DERIVED from (threshold, targetRecall)
     * via [[bandingForRecall]] — the fixed→auto convention
-    * (`annLshPairsSized`, `semDedupSized`) applied to its last family.
+    * (`annLshPairsAuto`, `semDedupAuto`) applied to its last family.
     * A user states the semantic contract ("pairs at Jaccard ≥ 0.5,
     * catch ≥ 95% of them") and the S-curve inversion picks the
     * cheapest (bands × rows) signature that meets it — at (0.5, 0.95)

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * Design for 100 TB:
   *  - Norms are computed once per row (projection), never per pair.
   *  - The exact pair scan is an explicit O(n²) baseline for small n /
-  *    oracle use; [[annLsh]] replaces it at scale: per-table bucket
+  *    oracle use; [[annLshPairsAuto]] replaces it at scale: per-table bucket
   *    keys from sign bits of hyperplane projections → shuffle on
   *    (table, bucket) → within-bucket join → exact verify on the
   *    (few) candidates. Tables/bits trade recall vs cost; both are
@@ -49,7 +49,7 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Exact all-pairs cosine ≥ threshold (id_a < id_b). O(n²) — the
-    * small-n baseline and near-dup verifier; use [[annLsh]] at scale.
+    * small-n baseline and near-dup verifier; use [[annLshPairsAuto]] at scale.
     *
     * Guarded: refuses above `maxRows` input rows so the cartesian plan
     * cannot be reached accidentally at scale (the guard is an eager
@@ -64,7 +64,7 @@ object Similarity {
     val over = df.limit((maxRows + 1).min(Int.MaxValue.toLong).toInt).count() > maxRows
     require(!over,
       s"cosinePairs is an O(n^2) exact baseline; input exceeds maxRows=$maxRows. " +
-        "Use annLsh/ivf for large inputs, or raise maxRows explicitly.")
+        "Use annLshPairsAuto/ivf for large inputs, or raise maxRows explicitly.")
     val nv = df.select(id.as("id"), normalize(vecD(vec)).as("nv"))
       .filter(col("nv").isNotNull)
     val l = nv.select(col("id").as("id_a"), col("nv").as("nv_a"))
@@ -566,47 +566,32 @@ object Similarity {
       .join(dropped, Seq("id"), "left_anti")
   }
 
-  /** ⊕ Corpus-sized [[semDedupPq]]: coarse k from `clustersForCorpus`
-    * so cluster occupancy — and the Σc² code-pair scan — stays
-    * constant as the corpus grows; PQ codebook k stays fixed
-    * (quantization fidelity, not bucket occupancy). Fixed coarse
-    * k=16 was measured DEGENERATING at the second decade (every
-    * cluster above the `maxCluster` backstop → pair generation
-    * skipped, dedup finds nothing); the sized form holds 3.8× per
-    * decade (BENCH_NOTES round 11). At every driver fixture size the
-    * derived k equals the pinned 16, so q146 shares q145's oracle
-    * bit-for-bit — the q112 convention.
+  /** ⊕ THE entry point for PQ-accelerated semantic dedup at corpus
+    * scale — the [[semDedupAuto]] treatment applied to the PQ path:
+    * one `count()` feeds [[clustersForCorpus]] (coarse k) and
+    * [[graft.ops.Skew.partitionsForCorpus]] (the pair-join
+    * exchange). The PQ codebook stays at the pinned m=4 × k=16
+    * (quantization fidelity, not occupancy). Fixed coarse k=16 was
+    * measured DEGENERATING at the second decade (every cluster above
+    * the `maxCluster` backstop → pair generation skipped, dedup finds
+    * nothing); the sized k holds 3.8× per decade (BENCH_NOTES round
+    * 11). Both derivations floor to the pinned configuration at
+    * fixture scale, so q146/q151 share q145's oracle bit-for-bit.
+    *
+    * Owns the models it fits: the result is materialized eagerly
+    * (`localCheckpoint`, the [[Dedup.dupClusters]] convention), then
+    * the IVF assignment and PQ code caches are released, so no call
+    * leaves a persisted table behind.
     */
-  def semDedupPqSized(df: DataFrame, id: Column, vec: Column, tau: Double,
-                      m: Int = 4, codebookK: Int = 16,
-                      targetCluster: Int = 200, roundTo: Int = 4,
-                      maxCluster: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val kc = clustersForCorpus(df.count(), targetCluster)
-    val ivf = ivfFit(df, id, vec, kc, iters = 2, quantize = Some(9))
-    val pq = pqFit(df, id, vec, m, codebookK, iters = 1, quantize = Some(9))
-    semDedupPq(ivf, pq, tau, roundTo, maxCluster)
-  }
-
-  /** ⊕ THE documented entry point for PQ-accelerated semantic dedup
-    * at corpus scale ([[semDedupPqSized]] plus the sized pair-join
-    * exchange — the [[semDedupAuto]] treatment applied to the PQ
-    * path): one `count()` feeds [[clustersForCorpus]] (coarse k; PQ
-    * codebook k stays fixed — quantization fidelity, not occupancy)
-    * and [[graft.ops.Skew.partitionsForCorpus]]. Floors to the pinned
-    * configuration at fixture scale, so q151 shares q145/q146's
-    * oracle bit-for-bit.
-    */
-  def semDedupPqAuto(df: DataFrame, id: Column, vec: Column, tau: Double,
-                     m: Int = 4, codebookK: Int = 16,
-                     targetCluster: Int = 200, roundTo: Int = 4,
-                     maxCluster: Int = Dedup.DefaultMaxBucket,
-                     rowsPerPartition: Long = 1L << 18): DataFrame = {
+  def semDedupPqAuto(df: DataFrame, id: Column, vec: Column, tau: Double): DataFrame = {
     val n = df.count()
-    val kc = clustersForCorpus(n, targetCluster)
-    val ivf = ivfFit(df, id, vec, kc, iters = 2, quantize = Some(9))
-    val pq = pqFit(df, id, vec, m, codebookK, iters = 1, quantize = Some(9))
-    semDedupPq(ivf, pq, tau, roundTo, maxCluster,
-      Some(graft.ops.Skew.partitionsForCorpus(n, rowsPerPartition)))
+    val ivf = ivfFit(df, id, vec, clustersForCorpus(n), iters = 2, quantize = Some(9))
+    try {
+      val pq = pqFit(df, id, vec, m = 4, k = 16, iters = 1, quantize = Some(9))
+      try semDedupPq(ivf, pq, tau,
+          numPartitions = Some(graft.ops.Skew.partitionsForCorpus(n))).localCheckpoint()
+      finally pq.unpersist()
+    } finally ivf.unpersist()
   }
 
   /** Row-local code assignment: argmin ‖s − c‖² over subspace `j`'s
@@ -740,26 +725,43 @@ object Similarity {
     * cluster partition. At corpus scale use [[semDedupAuto]] — the
     * documented default entry point — rather than picking k by hand:
     * fixed k was measured silently degenerating to a no-op at sf10.
+    *
+    * Owns the model it fits: the kept rows are materialized eagerly
+    * (`localCheckpoint`, the [[Dedup.dupClusters]] convention) before
+    * the IVF assignment cache is released.
     */
   def semDedup(df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
                tau: Double, quantize: Option[Int] = None, roundTo: Int = 4,
                maxCluster: Int = Dedup.DefaultMaxBucket,
-               numPartitions: Option[Int] = None): DataFrame =
-    semDedupParts(df, id, vec, k, iters, tau, quantize, roundTo,
-      maxCluster, numPartitions)._2
+               numPartitions: Option[Int] = None): DataFrame = {
+    val model = ivfFit(df, id, vec, k, iters, quantize)
+    try keptWithin(model.assigned, tau, roundTo, maxCluster, numPartitions)
+      .localCheckpoint()
+    finally model.unpersist()
+  }
 
   /** [[semDedup]] plus the `(id, cluster)` ASSIGNMENT it derived —
     * the datacard form: the q256 funnel measures its pair work
     * (Σ c·(c−1)/2 over under-cap clusters) from the assignment
     * table, which the kept-rows result alone cannot reconstruct.
-    * Returns (assigned, kept); [[semDedup]] is the kept half.
+    * Returns (assigned, kept), both materialized before the model's
+    * cache is released; [[semDedup]] is the kept half.
     */
   def semDedupParts(df: DataFrame, id: Column, vec: Column, k: Int, iters: Int,
                     tau: Double, quantize: Option[Int] = None, roundTo: Int = 4,
                     maxCluster: Int = Dedup.DefaultMaxBucket,
                     numPartitions: Option[Int] = None): (DataFrame, DataFrame) = {
     val model = ivfFit(df, id, vec, k, iters, quantize)
-    val a = model.assigned  // (id, nv, cluster), persisted by ivfFit
+    try (model.assigned.select(col("id"), col("cluster")).localCheckpoint(),
+      keptWithin(model.assigned, tau, roundTo, maxCluster, numPartitions).localCheckpoint())
+    finally model.unpersist()
+  }
+
+  /** The ε-ball drop over an `(id, nv, cluster)` assignment: the kept
+    * `(id, cluster)` rows of [[semDedup]].
+    */
+  private def keptWithin(a: DataFrame, tau: Double, roundTo: Int, maxCluster: Int,
+                         numPartitions: Option[Int]): DataFrame = {
     val okClusters = a.groupBy(col("cluster"))
       .agg(count(lit(1)).as("__csz"))
       .filter(col("__csz") <= maxCluster)
@@ -774,9 +776,7 @@ object Similarity {
       .filter(col("id_a") < col("id_b") &&
         round(dot(col("nv_a"), col("nv_b")), roundTo) >= tau)
       .select(col("id_b").as("id")).distinct()
-    (a.select(col("id"), col("cluster")),
-      a.select(col("id"), col("cluster"))
-        .join(dropped, Seq("id"), "left_anti"))
+    a.select(col("id"), col("cluster")).join(dropped, Seq("id"), "left_anti")
   }
 
   /** ⊕ Per-dimension standardization (z-score whitening) — the
@@ -868,39 +868,22 @@ object Similarity {
   def searchClustersForCorpus(n: Long, balance: Int = 8, minK: Int = 16): Int =
     math.max(minK, math.ceil(math.sqrt(n.toDouble / balance)).toInt)
 
-  /** [[semDedup]] with k derived from one count() pass via
-    * [[clustersForCorpus]] — the corpus-scale entry point (q112;
-    * spec-proved identical to the fixed form at fixture sizes where
-    * the derived k equals the pinned 16).
-    */
-  def semDedupSized(df: DataFrame, id: Column, vec: Column, iters: Int,
-                    tau: Double, targetCluster: Int = 200,
-                    quantize: Option[Int] = None, roundTo: Int = 4,
-                    maxCluster: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val k = clustersForCorpus(df.count(), targetCluster)
-    semDedup(df, id, vec, k, iters, tau, quantize, roundTo, maxCluster)
-  }
-
-  /** ⊕ THE documented entry point for semantic dedup at corpus scale:
-    * ONE `count()` derives the cluster count ([[clustersForCorpus]] —
+  /** ⊕ THE entry point for semantic dedup at corpus scale: ONE
+    * `count()` derives the cluster count ([[clustersForCorpus]] —
     * fixed k degenerates to deduping NOTHING once every cluster
     * outgrows the `maxCluster` backstop, measured at sf10) and the
     * within-cluster pair join's partition count
     * ([[graft.ops.Skew.partitionsForCorpus]]). Both floor to the
     * pinned values (k=16, 32 partitions) at every driver fixture
-    * size, so q150 shares q106/q112's oracle bit-for-bit. Prefer
-    * this over [[semDedup]]/[[semDedupSized]] unless replaying a
-    * pinned configuration.
+    * size, so q112/q150 share q106's oracle bit-for-bit. Prefer this
+    * over [[semDedup]] unless replaying a pinned configuration. Like
+    * [[semDedup]], it leaves no cached model behind.
     */
   def semDedupAuto(df: DataFrame, id: Column, vec: Column, iters: Int,
-                   tau: Double, targetCluster: Int = 200,
-                   quantize: Option[Int] = None, roundTo: Int = 4,
-                   maxCluster: Int = Dedup.DefaultMaxBucket,
-                   rowsPerPartition: Long = 1L << 18): DataFrame = {
+                   tau: Double, quantize: Option[Int] = None): DataFrame = {
     val n = df.count()
-    semDedup(df, id, vec, clustersForCorpus(n, targetCluster), iters, tau,
-      quantize, roundTo, maxCluster,
-      Some(graft.ops.Skew.partitionsForCorpus(n, rowsPerPartition)))
+    semDedup(df, id, vec, clustersForCorpus(n), iters, tau, quantize,
+      numPartitions = Some(graft.ops.Skew.partitionsForCorpus(n)))
   }
 
   /** md5-parity ±1 JL plane component — the [[planeComp]] derivation
@@ -939,11 +922,23 @@ object Similarity {
           .as("y"))
   }
 
+  /** LSH tables (bucket keys per vector) of every LSH form here —
+    * the oracled q26 configuration.
+    */
+  private val LshTables = 16
+
   /** ⊕ ANN via random-hyperplane LSH (Charikar 2002, with ±1
     * Rademacher planes — [[planeComp]]): for each of `numTables`
     * tables, a `bitsPerTable`-bit bucket key from projection signs;
     * same-bucket pairs are candidates; exact cosine verifies. Recall
     * for similarity s: 1-(1-p^b)^L with p = 1 - arccos(s)/π.
+    * Returns `(id_a, id_b, cos_sim)` with id_a < id_b, unordered:
+    * compositional consumers (q66 re-aggregates the pairs into
+    * clusters, q86 re-windows them per vector) would pay a
+    * presentation `orderBy` as dead cost, so callers that present the
+    * pairs sort them (`.orderBy(id_a, id_b)`, q26). The cross-table
+    * `distinct` is semantics (a pair colliding in several LSH tables
+    * must surface once), not presentation.
     *
     * Candidate generation is the single-scan grouped form
     * ([[Dedup.bucketPairs]]): ALL numTables bucket keys come from ONE
@@ -968,22 +963,9 @@ object Similarity {
     * oracled q26/q66/q86 pin 6 bits only because the sf-fixture
     * oracle mirrors that constant.
     */
-  def annLsh(df: DataFrame, id: Column, vec: Column,
-             threshold: Double, numTables: Int = 16, bitsPerTable: Int = 6,
-             roundTo: Int = 4, maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
-    annLshPairs(df, id, vec, threshold, numTables, bitsPerTable, roundTo, maxBucket)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** [[annLsh]] without the terminal global sort — the form
-    * compositional consumers want: q66 re-aggregates the pairs into
-    * clusters and q86 re-windows them per vector, so a presentation
-    * `orderBy` (range-partition + sort) between pair generation and
-    * the consumer's own shuffle is dead cost. The cross-table
-    * `distinct` stays — it is semantics (a pair colliding in several
-    * LSH tables must surface once), not presentation.
-    */
   def annLshPairs(df: DataFrame, id: Column, vec: Column,
-                  threshold: Double, numTables: Int = 16, bitsPerTable: Int = 6,
+                  threshold: Double, numTables: Int = LshTables,
+                  bitsPerTable: Int = 6,
                   roundTo: Int = 4, maxBucket: Int = Dedup.DefaultMaxBucket,
                   numPartitions: Option[Int] = None): DataFrame = {
     val nv = df.select(id.as("id"), normalize(vecD(vec)).as("nv"))
@@ -1028,46 +1010,26 @@ object Similarity {
     math.max(6, math.ceil(math.log(ratio) / math.log(2.0)).toInt)
   }
 
-  /** ⊕ [[annLshPairs]] with the bucket width derived from the corpus
-    * size ([[bitsForCorpus]]) instead of a fixed constant — the
-    * 100 TB form: one cheap `count()` pass, then bits = log₂(n/target),
-    * which keeps candidate-pair work per input row constant as the
-    * corpus grows (a fixed width is quadratic — see [[annLsh]] doc).
-    * Like the auto skew wrappers ([[graft.ops.Time.trailingSumsAuto]]),
-    * this makes the documented scale guidance executable instead of
-    * advisory; cache `df` upstream if it is itself expensive.
-    */
-  def annLshPairsSized(df: DataFrame, id: Column, vec: Column,
-                       threshold: Double, targetBucket: Int = 200,
-                       numTables: Int = 16, roundTo: Int = 4,
-                       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
-    annLshPairs(df, id, vec, threshold, numTables,
-      bitsForCorpus(df.count(), targetBucket), roundTo, maxBucket)
-
-  /** ⊕ THE documented entry point for LSH pair generation at corpus
-    * scale: ONE `count()` derives BOTH scale knobs — the bucket width
-    * ([[bitsForCorpus]]: fixed bits are measured quadratic past sf1)
-    * and the dominant exchange's partition count
+  /** ⊕ THE entry point for LSH pair generation at corpus scale: ONE
+    * `count()` derives BOTH scale knobs — the bucket width
+    * ([[bitsForCorpus]]: bits = log₂(n/target) keeps candidate-pair
+    * work per input row constant, where fixed bits are measured
+    * quadratic past sf1) and the dominant exchange's partition count
     * ([[graft.ops.Skew.partitionsForCorpus]] over the n·numTables
     * exploded bucket rows: a fixed partition count spills once
     * per-partition bytes outgrow executor memory). At every driver
     * fixture size both derivations floor to the pinned values
-    * (6 bits, 32 partitions), so q149 shares q26/q95's oracle
-    * bit-for-bit — the q112/q146 convention; the decade-2 ScaleBench
-    * slopes are the scale evidence. Prefer this over [[annLshPairs]]
-    * (fixed width) and [[annLshPairsSized]] (sized width, session
-    * partitioning) unless replaying a pinned configuration; cache
-    * `df` upstream if it is itself expensive.
+    * (6 bits, 32 partitions), so q95/q149 share q26's oracle
+    * bit-for-bit; the decade-2 ScaleBench slopes are the scale
+    * evidence. Prefer this over [[annLshPairs]] unless replaying a
+    * pinned configuration; cache `df` upstream if it is itself
+    * expensive.
     */
   def annLshPairsAuto(df: DataFrame, id: Column, vec: Column,
-                      threshold: Double, targetBucket: Int = 200,
-                      numTables: Int = 16, roundTo: Int = 4,
-                      maxBucket: Int = Dedup.DefaultMaxBucket,
-                      rowsPerPartition: Long = 1L << 18): DataFrame = {
+                      threshold: Double): DataFrame = {
     val n = df.count()
-    annLshPairs(df, id, vec, threshold, numTables,
-      bitsForCorpus(n, targetBucket), roundTo, maxBucket,
-      Some(graft.ops.Skew.partitionsForCorpus(n * numTables, rowsPerPartition)))
+    annLshPairs(df, id, vec, threshold, bitsPerTable = bitsForCorpus(n),
+      numPartitions = Some(graft.ops.Skew.partitionsForCorpus(n * LshTables)))
   }
 
   /** ⊕ Margin-based mutual-kNN mining (Artetxe & Schwenk 2019,
@@ -1103,7 +1065,7 @@ object Similarity {
     */
   def marginMutualKnn(df: DataFrame, id: Column, vec: Column,
                       threshold: Double = 0.3, k: Int = 3,
-                      numTables: Int = 16, bitsPerTable: Int = 6,
+                      numTables: Int = LshTables, bitsPerTable: Int = 6,
                       roundTo: Int = 4,
                       maxBucket: Int = Dedup.DefaultMaxBucket,
                       numPartitions: Option[Int] = None): DataFrame = {
@@ -1152,15 +1114,10 @@ object Similarity {
     * q174's oracle bit-for-bit — the q112/q149 convention.
     */
   def marginMutualKnnAuto(df: DataFrame, id: Column, vec: Column,
-                          threshold: Double = 0.3, k: Int = 3,
-                          targetBucket: Int = 200, numTables: Int = 16,
-                          roundTo: Int = 4,
-                          maxBucket: Int = Dedup.DefaultMaxBucket,
-                          rowsPerPartition: Long = 1L << 18): DataFrame = {
+                          threshold: Double = 0.3, k: Int = 3): DataFrame = {
     val n = df.count()
-    marginMutualKnn(df, id, vec, threshold, k, numTables,
-      bitsForCorpus(n, targetBucket), roundTo, maxBucket,
-      Some(graft.ops.Skew.partitionsForCorpus(n * numTables, rowsPerPartition)))
+    marginMutualKnn(df, id, vec, threshold, k, bitsPerTable = bitsForCorpus(n),
+      numPartitions = Some(graft.ops.Skew.partitionsForCorpus(n * LshTables)))
   }
 
   /** ⊕ Embedding isolation screen — the kNN-distance outlier check
@@ -1185,7 +1142,7 @@ object Similarity {
     */
   def isolationScreen(df: DataFrame, id: Column, vec: Column,
                       threshold: Double = 0.3, k: Int = 3, tau: Double = 0.5,
-                      numTables: Int = 16, bitsPerTable: Int = 6,
+                      numTables: Int = LshTables, bitsPerTable: Int = 6,
                       roundTo: Int = 4,
                       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     // membership check only: a vector normalizes to non-null iff its

@@ -106,11 +106,7 @@ object CommunityDiscovery {
   def run(subreddits: DataFrame, posts: DataFrame, comments: DataFrame,
           p: Params): DataFrame = {
     val direct = directHits(subreddits, p)
-    // matchedPosts feeds the post channel AND (when enabled) the
-    // comment-evidence probe; budget-bounded small (≤ postLimit ×
-    // |queries| rows), so persisting avoids re-running the full posts
-    // scan per consumer.
-    val fromPosts = postHits(posts, subreddits, p).persist()
+    val fromPosts = postHits(posts, subreddits, p)
     val postChannel = fromPosts.select(col("community"), col("subscribers"),
       lit(Score.FoundViaPost).as("found_via"))
     val commentChannel =

@@ -108,11 +108,7 @@ object SignalScan {
     * explicit key).
     */
   def run(posts: DataFrame, comments: DataFrame, p: Params): DataFrame = {
-    // tp is consumed by BOTH branches; it is budget-bounded small
-    // (≤ postLimit × |subreddits| rows), so persisting it turns two
-    // full posts-scans into one — the branch union then reuses the
-    // materialized budget set.
-    val tp = topPosts(posts, p).persist()
+    val tp = topPosts(posts, p)
     postSignals(tp, p)
       .unionByName(commentSignals(tp, comments, p))
       .orderBy(col("Subreddit"), col("Type"), col("Link"), col("Match"))

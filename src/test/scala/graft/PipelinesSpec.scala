@@ -117,6 +117,17 @@ class PipelinesSpec extends SparkSuite {
     assert(empty.isEmpty)
   }
 
+  test("pipelines leave no persisted RDDs behind") {
+    // parameters no other test uses: a cache left by an earlier
+    // identical request would otherwise be reused and hide a new one
+    val discovered = persistedBy(CommunityDiscovery.run(subreddits, posts, comments,
+      CommunityDiscovery.Params(queries = Seq("advice", "engine"))).collect())
+    assert(discovered.isEmpty, s"CommunityDiscovery.run left $discovered")
+    val scanned = persistedBy(SignalScan.run(posts, comments, SignalScan.Params(
+      subreddits = Seq("gamedev", "indiehackers"), keywords = Seq("advice"))).collect())
+    assert(scanned.isEmpty, s"SignalScan.run left $scanned")
+  }
+
   test("csv sink: single file with header; enrichment adds workflow columns") {
     val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
     val out = SignalScan.run(posts, comments, SignalScan.Params(

@@ -281,6 +281,30 @@ class PqSpec extends SparkSuite {
     ivf.unpersist()
   }
 
+  test("semDedupPqAuto ≡ semDedupPq at the pinned q145 configuration (derived k floors to 16)") {
+    val ivf = Similarity.ivfFit(em, col("vec_id"), col("embedding"),
+      k = 16, iters = 2, quantize = Some(9))
+    val want = Similarity.semDedupPq(ivf, pq, tau = 0.25)
+      .select($"id", $"cluster").as[(Long, Int)].collect().toSet
+    ivf.unpersist()
+    val got = Similarity.semDedupPqAuto(em, col("vec_id"), col("embedding"), tau = 0.25)
+      .select($"id", $"cluster").as[(Long, Int)].collect().toSet
+    assert(want.nonEmpty && got == want)
+  }
+
+  test("semDedupPqAuto and semDedupAuto leave no persisted RDDs behind") {
+    // each call gets an input plan no other call has cached: a model
+    // cache leaked by an earlier identical fit would otherwise be
+    // reused and hide a new leak
+    def fresh(tag: Long) = em.filter(col("vec_id") =!= -tag)
+    val pqLeft = persistedBy(Similarity.semDedupPqAuto(fresh(1),
+      col("vec_id"), col("embedding"), tau = 0.25).collect())
+    assert(pqLeft.isEmpty, s"semDedupPqAuto left $pqLeft")
+    val left = persistedBy(Similarity.semDedupAuto(fresh(2),
+      col("vec_id"), col("embedding"), iters = 2, tau = 0.42, quantize = Some(9)).collect())
+    assert(left.isEmpty, s"semDedupAuto left $left")
+  }
+
   test("ADC ranking correlates with exact cosine: top-10 ADC ∩ top-30 exact is non-trivial") {
     val ivf = Similarity.ivfFit(em, col("vec_id"), col("embedding"),
       k = 16, iters = 2, quantize = Some(9))

@@ -205,11 +205,11 @@ class SimilaritySpec extends SparkSuite {
     assert(e.getMessage.contains("O(n^2)"))
   }
 
-  test("annLsh results are a subset of exact pairs with decent recall") {
+  test("annLshPairs results are a subset of exact pairs with decent recall") {
     val em = sources.Tables.embeddings(spark, sfDir)
     val exact = Similarity.cosinePairs(em, col("vec_id"), col("embedding"), 0.42)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val ann = Similarity.annLsh(em, col("vec_id"), col("embedding"), 0.42)
+    val ann = Similarity.annLshPairs(em, col("vec_id"), col("embedding"), 0.42)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(ann.subsetOf(exact), s"ANN produced non-exact pairs: ${ann -- exact}")
     if (exact.nonEmpty) {
@@ -251,24 +251,22 @@ class SimilaritySpec extends SparkSuite {
     assert(!plan.contains("SortMergeJoin"), s"vectors must not sort-merge:\n$plan")
   }
 
-  test("bitsForCorpus holds occupancy constant; sized pairs == fixed-bit pairs at fixture scale") {
+  test("bitsForCorpus holds occupancy constant; auto pairs == fixed-bit pairs at fixture scale") {
     import org.apache.spark.sql.functions._
     // width tracks log2(n/target): +1 decade of rows = +log2(10) bits
     assert(Similarity.bitsForCorpus(1000) == 6)          // floor
     assert(Similarity.bitsForCorpus(200000) == 10)
     assert(Similarity.bitsForCorpus(2000000) == 14)      // next decade: +4 bits (ceil)
     assert(Similarity.bitsForCorpus(200000, targetBucket = 50) == 12)
-    // at fixture size the derived width IS the default 6, so the sized
-    // form must return byte-identical pairs to the oracled fixed form
+    // at fixture size the derived width IS the default 6 (and the
+    // derived partition count the floor), so the auto form must return
+    // byte-identical pairs to the oracled fixed form
     val em = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val fixed = Similarity.annLshPairs(em, col("vec_id"), col("embedding"), 0.42)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val sized = Similarity.annLshPairsSized(em, col("vec_id"), col("embedding"), 0.42)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(fixed.nonEmpty && sized == fixed)
     val auto = Similarity.annLshPairsAuto(em, col("vec_id"), col("embedding"), 0.42)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto == fixed)
+    assert(fixed.nonEmpty && auto == fixed)
   }
 
   test("numPartitions sizes the bucket exchange; no second exchange before the aggregate") {
@@ -318,7 +316,7 @@ class SimilaritySpec extends SparkSuite {
     assert(z.getDouble(0) == 0.0 && z.getSeq[Int](1).forall(_ == 0))
   }
 
-  test("clustersForCorpus schedule; sized semDedup == fixed form at fixture scale") {
+  test("clustersForCorpus schedule; auto semDedup == fixed form at fixture scale") {
     // floor pins the oracle-scale k; past the floor, k tracks n/target
     assert(Similarity.clustersForCorpus(500) == 16)
     assert(Similarity.clustersForCorpus(2000) == 16)
@@ -329,14 +327,10 @@ class SimilaritySpec extends SparkSuite {
     val fixed = Similarity.semDedup(em, col("vec_id"), col("embedding"),
         k = 16, iters = 2, tau = 0.42, quantize = Some(9))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    val sized = Similarity.semDedupSized(em, col("vec_id"), col("embedding"),
-        iters = 2, tau = 0.42, quantize = Some(9))
-      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(fixed.nonEmpty && sized == fixed)
     val auto = Similarity.semDedupAuto(em, col("vec_id"), col("embedding"),
         iters = 2, tau = 0.42, quantize = Some(9))
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(auto == fixed)
+    assert(fixed.nonEmpty && auto == fixed)
   }
 
   test("standardizeDims: whitened dims have mean~0 std~1; zero-variance dim centers") {

@@ -7,6 +7,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Ids of the RDDs `body` leaves persisted. Local-checkpoint blocks
+    * are not counted: they belong to the DataFrame a call returns, and
+    * the ContextCleaner frees them with it.
+    */
+  def persistedBy(body: => Unit): Set[Int] = {
+    def cached = spark.sparkContext.getPersistentRDDs
+      .collect { case (id, rdd) if !rdd.isCheckpointed => id }.toSet
+    val before = cached
+    body
+    cached -- before
+  }
 }
 
 object SparkSuite {

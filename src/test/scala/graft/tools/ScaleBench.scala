@@ -65,18 +65,18 @@ object ScaleBench {
     import org.apache.spark.sql.{DataFrame, SparkSession => SS}
     val sizedVariants: Map[String, (SS, String) => DataFrame] = Map(
       "q26_ann_lsh_SIZED" -> ((s: SS, dir: String) =>
-        graft.ext.Similarity.annLshPairsSized(
+        graft.ext.Similarity.annLshPairsAuto(
           graft.sources.Tables.embeddings(s, dir),
           col("vec_id"), col("embedding"), threshold = 0.42)),
       "q66_embedding_dedup_SIZED" -> ((s: SS, dir: String) =>
         graft.ext.Dedup.dupClusters(
-          graft.ext.Similarity.annLshPairsSized(
+          graft.ext.Similarity.annLshPairsAuto(
             graft.sources.Tables.embeddings(s, dir),
             col("vec_id"), col("embedding"), threshold = 0.42))),
-      // kept for decade-2 continuity; since round 11 the sized form is
-      // also registered as q146_semdedup_pq_sized (same library call)
+      // kept for decade-2 continuity; the same library call is also
+      // registered as q146_semdedup_pq_sized and q151_semdedup_pq_auto
       "q145_semdedup_pq_SIZED" -> ((s: SS, dir: String) =>
-        graft.ext.Similarity.semDedupPqSized(
+        graft.ext.Similarity.semDedupPqAuto(
           graft.sources.Tables.embeddings(s, dir),
           col("vec_id"), col("embedding"), tau = 0.25)),
       // q220's IVF SIDE alone (fit + probe search, sized schedule) —
@@ -95,7 +95,7 @@ object ScaleBench {
       }),
       "q86_knn_graph_SIZED" -> ((s: SS, dir: String) => {
         import org.apache.spark.sql.expressions.Window
-        val pairs = graft.ext.Similarity.annLshPairsSized(
+        val pairs = graft.ext.Similarity.annLshPairsAuto(
           graft.sources.Tables.embeddings(s, dir),
           col("vec_id"), col("embedding"), threshold = 0.3)
         pairs.select(explode(array(

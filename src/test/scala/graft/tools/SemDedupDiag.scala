@@ -22,7 +22,7 @@ object SemDedupDiag {
       }
       run("fixed k=16")(graft.ext.Similarity.semDedup(
         em, col("vec_id"), col("embedding"), k = 16, iters = 2, tau = 0.42, quantize = Some(9)))
-      run("sized")(graft.ext.Similarity.semDedupSized(
+      run("auto")(graft.ext.Similarity.semDedupAuto(
         em, col("vec_id"), col("embedding"), iters = 2, tau = 0.42, quantize = Some(9)))
     }
     spark.stop()
